@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   *        → canonicalization (CC over alias-variant edges)
   *        → canonical triple + entity tables (partitioned by predicate)
   *
-  * Every stage materializes via TableIO (atomic snapshot + per-partition
+  * Every stage materializes via TableIO (atomic snapshot + per-write-task
   * lineage), so a killed run resumes after its last committed stage with
   * byte-identical results (ResumeSpec).
   */
@@ -105,10 +105,11 @@ object KgPipeline {
         triples.select(col("subj")).union(triples.select(col("obj")))).toDF()
     }
 
-    // one dictionary-sized count decides BOTH entity joins below: broadcast
+    // one dictionary row count decides BOTH entity joins below: broadcast
     // while the dictionary is driver-safe, salted shuffle join beyond
-    // (canon is row-for-row the dictionary, so the one count covers it too)
-    val dictIsSmall = aliasDict.count() <= broadcastMaxDictRows
+    // (canon is row-for-row the dictionary, so the one count covers it too).
+    // The count comes from the alias_dict manifest, so it costs no job.
+    val dictIsSmall = log.rows("alias_dict") <= broadcastMaxDictRows
 
     val linked = log.runStage("linked_triples") {
       val dict = aliasDict.select(col("alias"), col("entity_id"))

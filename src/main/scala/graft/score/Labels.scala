@@ -27,7 +27,6 @@ object Labels {
     "Other")
 
   val other: String = "Other"
-  val otherId: Int = all.length - 1
 
   def id(label: String): Int = all.indexOf(label)
 

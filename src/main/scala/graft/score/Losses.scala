@@ -30,13 +30,6 @@ object Losses {
   def sigmoidXent(logit: Double, label: Double): Double =
     math.max(logit, 0.0) - logit * label + math.log1p(math.exp(-math.abs(logit)))
 
-  /** tf.nn.l2_loss: sum(x²)/2 (the L2 penalty term of relembed.py:275-287). */
-  def l2Loss(xs: Array[Double]): Double = {
-    var s = 0.0; var i = 0
-    while (i < xs.length) { s += xs(i) * xs(i); i += 1 }
-    s / 2
-  }
-
   // ---- M6: sparse softmax cross-entropy (relembed.py:419-426) ----
   //   xent(logits, k) = logsumexp(logits) − logits(k)
   def softmaxXent(logits: Array[Double], label: Int): Double = {

@@ -4,6 +4,8 @@ import graft.ckpt.StageLog
 import graft.pipeline.KgPipeline
 import graft.tableio.TableIO
 import java.nio.file.Files
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** TableIO snapshot semantics + checkpointed resumability (north rule:
@@ -14,6 +16,92 @@ class ResumeSpec extends SparkSuite {
 
   private def tmpDir(prefix: String) =
     Files.createTempDirectory(prefix).toString
+
+  /** Spark jobs launched by `f` on this thread (tagged by a job group). */
+  private def jobsOf(f: => Unit): Int = {
+    val group = s"resume-spec-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, group)
+    try f finally {
+      spark.sparkContext.clearJobGroup()
+      ListenerDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  private def fields(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => (f.name, f.dataType))
+
+  test("TableIO: a manifest-schema read matches an inferred read (plain, int and string partitions)") {
+    val df = Seq((1L, "a", 3, "p1", 0.5), (2L, "b", 7, "p2", 0.25), (3L, "c", 3, "p1", 1.0))
+      .toDF("id", "v", "entity_bucket", "pred", "score")
+    for (partitionBy <- Seq(Nil, Seq("entity_bucket"), Seq("pred"))) {
+      val table = tmpDir("graft-schema")
+      val snap = TableIO.commit(df.repartition(2), table, partitionBy)
+      val viaManifest = TableIO.read(spark, table)
+      val inferred = spark.read.parquet(snap.dataDir)
+      assert(fields(viaManifest) == fields(inferred), s"partitionBy=$partitionBy")
+      assert(viaManifest.collect().toSet == inferred.collect().toSet)
+      assert(fields(TableIO.readVersion(spark, table, snap.version)) == fields(inferred))
+    }
+  }
+
+  test("TableIO: observed per-task counts equal the counts taken from the committed files") {
+    // the speculation fallback (countFileParts) and the observed counts must
+    // agree task for task, partitioned or not
+    val df = spark.range(0, 1000).select($"id", ($"id" % 5).cast("int").as("entity_bucket"))
+    for (partitionBy <- Seq(Nil, Seq("entity_bucket"))) {
+      val table = tmpDir("graft-parts")
+      val snap = TableIO.commit(df.repartition(3, $"id"), table, partitionBy)
+      val observed = snap.partRows.get
+      assert(observed.keySet == Set(0, 1, 2) && snap.rows == 1000L)
+      assert(TableIO.countFileParts(spark, snap.dataDir, snap.schema) == observed)
+      assert(TableIO.current(table).partRows.contains(observed), "manifest round trip")
+    }
+  }
+
+  test("StageLog: TableIO.read launches no job and a fresh runStage exactly three") {
+    val runDir = tmpDir("graft-jobs")
+    val log = new StageLog(spark, runDir)
+    // data write + lineage commit + metrics commit; the read-back is free
+    assert(jobsOf(log.runStage("s1")(Seq((1L, "x"), (2L, "y")).toDF("id", "v"))) == 3)
+    assert(jobsOf(TableIO.read(spark, log.stagePath("s1"))) == 0)
+    assert(jobsOf(log.runStage("s1")(sys.error("committed stage must not recompute"))) == 0)
+  }
+
+  test("pipeline: lineage sums to the manifest rows, and a kill before bookkeeping is repaired") {
+    val runDir = tmpDir("graft-bookkeeping")
+    val out = KgPipeline.run(spark, sfDir, runDir).collect().toSet
+    val log = new StageLog(spark, runDir)
+    def counts(s: String) =
+      (log.lineage(Seq(s)).collect().toSet, log.metrics(Seq(s)).collect().toSet)
+    val fresh = KgPipeline.stages.map(s => s -> counts(s)).toMap
+    for (s <- KgPipeline.stages) {
+      val manifestRows = log.rows(s)
+      assert(log.lineage(Seq(s)).agg(sum("rows")).first().getLong(0) == manifestRows, s)
+      assert(TableIO.read(spark, log.stagePath(s)).count() == manifestRows, s)
+    }
+    // a kill after each stage's data commit but before its lineage and
+    // metrics commits: the rerun recomputes nothing and rebuilds both; the
+    // triples manifest predates per-task counts, so its lineage is rebuilt
+    // by counting the committed files
+    val manifest = java.nio.file.Paths.get(log.stagePath("triples"), "snapshots",
+      s"v${TableIO.currentVersion(log.stagePath("triples")).get}.json")
+    Files.writeString(manifest, Files.readString(manifest).replaceAll(""", "partRows": \{[^}]*\}""", ""))
+    assert(TableIO.current(log.stagePath("triples")).partRows.isEmpty)
+    for (s <- KgPipeline.stages) {
+      new scala.reflect.io.Directory(new java.io.File(s"$runDir/${s}__lineage")).deleteRecursively()
+      new scala.reflect.io.Directory(new java.io.File(s"$runDir/__metrics/$s")).deleteRecursively()
+    }
+    assert(KgPipeline.run(spark, sfDir, runDir).collect().toSet == out)
+    KgPipeline.stages.foreach(s => assert(counts(s) == fresh(s), s))
+  }
 
   test("TableIO: atomic snapshot commit, read-back, versioning, time travel") {
     val table = tmpDir("graft-table")
